@@ -24,6 +24,15 @@ from pyspark.sql import functions as F
 from rs_graphdb_spark.cypher import ast
 from rs_graphdb_spark.cypher.parser import parse_cypher
 from rs_graphdb_spark.graph import PropertyGraph
+from rs_graphdb_spark.operators.dml import (
+    _append_edges,
+    _append_nodes,
+    _delete_victims,
+    _next_id,
+    _props_cond,
+    _set_edges,
+    _set_nodes,
+)
 
 
 class CypherCompileError(ValueError):
@@ -32,6 +41,11 @@ class CypherCompileError(ValueError):
 
 def _pref(var: str, col: str) -> str:
     return f"{var}__{col}"
+
+
+def _lits(pairs) -> dict[str, Column]:
+    """AST ``((key, literal), ...)`` updates as a SET column map."""
+    return {k: F.lit(v) for k, v in pairs}
 
 
 class Compiler:
@@ -387,7 +401,7 @@ class Compiler:
         src_pat, dst_pat = stmt.path.start, dst_node
         if rel.direction == "in":
             src_pat, dst_pat = dst_pat, src_pat
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
+        g = self.g
         if rel.rel_type in g.edges:
             es = g.edges[rel.rel_type]
         else:
@@ -403,7 +417,8 @@ class Compiler:
             es = EdgeSet(df=empty, src_label=src_pat.label,
                          dst_label=dst_pat.label)
 
-        def _ensure_nodes(np: ast.NodePattern, label: str) -> None:
+        def _ensure_nodes(g: PropertyGraph, np: ast.NodePattern,
+                          label: str) -> PropertyGraph:
             """Create the endpoint from its pattern when nothing matches
             (MERGE creates the missing parts of the pattern)."""
             if np.label and np.label != label:
@@ -413,66 +428,39 @@ class Compiler:
             if label not in g.nodes:
                 raise CypherCompileError(f"unknown label {label!r}")
             if not np.props:
-                return
+                return g
             pat = ast.NodePattern(var=np.var, label=label, props=np.props)
-            merged = Compiler(g)._run_merge(ast.MergeStmt(node=pat))
-            g.nodes[label] = merged.nodes[label]
+            return Compiler(g)._run_merge(ast.MergeStmt(node=pat))
 
         def _ids(np: ast.NodePattern, label: str) -> DataFrame:
             df = g.nodes[label]
-            for k, v in np.props:
-                df = (df.filter(F.col(k) == F.lit(v))
-                      if k in df.columns else df.limit(0))
             # MERGE endpoint patterns are point lookups (a handful of ids);
             # without the coalesce the CartesianProduct below schedules
             # left-partitions × right-partitions near-empty tasks — 4000+
             # tasks for a 1×1 pair on a 32-way table
-            return df.select("id").coalesce(1)
+            return df.filter(_props_cond(df, np.props)).select("id").coalesce(1)
 
-        _ensure_nodes(src_pat, es.src_label)
-        _ensure_nodes(dst_pat, es.dst_label)
+        g = _ensure_nodes(g, src_pat, es.src_label)
+        g = _ensure_nodes(g, dst_pat, es.dst_label)
         a = _ids(src_pat, es.src_label).withColumnRenamed("id", "src")
         b = _ids(dst_pat, es.dst_label).withColumnRenamed("id", "dst")
         pairs = a.crossJoin(b)
-        missing = pairs.join(
-            es.df.select("src", "dst"), ["src", "dst"], "left_anti"
-        )
-        edge_df = es.df
-        if stmt.on_match:
-            matched = pairs.join(es.df.select("src", "dst"), ["src", "dst"],
-                                 "left_semi").withColumn("__m", F.lit(True))
-            flagged = edge_df.join(matched, ["src", "dst"], "left")
-            for k, v in stmt.on_match:
-                old = F.col(k) if k in edge_df.columns else F.lit(None)
-                flagged = flagged.withColumn(
-                    k, F.when(F.col("__m"), F.lit(v)).otherwise(old)
-                )
-            edge_df = flagged.drop("__m")
+        present = es.df.select("src", "dst")
+        missing = pairs.join(present, ["src", "dst"], "left_anti")
+        if stmt.on_match and rel.rel_type in g.edges:
+            matched = pairs.join(present, ["src", "dst"], "left_semi")
+            g = _set_edges(g, rel.rel_type, matched, _lits(stmt.on_match))
         if missing.isEmpty():
-            if edge_df is not es.df:
-                g.edges[rel.rel_type] = EdgeSet(
-                    df=edge_df, src_label=es.src_label, dst_label=es.dst_label
-                )
             return g
-        max_eid = edge_df.agg(F.max("edge_id")).first()[0] or 0
         w = Window.orderBy("src", "dst")
-        new = missing.withColumn("edge_id", F.lit(max_eid) + F.row_number().over(w))
+        first = _next_id(es.df, "edge_id")
+        new = missing.select(
+            (F.lit(first - 1) + F.row_number().over(w)).cast("long").alias("edge_id"),
+            "src", "dst",
+        )
         for k, v in stmt.on_create:
             new = new.withColumn(k, F.lit(v))
-        for c in new.columns:  # new edge-property keys extend the table
-            if c not in edge_df.columns:
-                edge_df = edge_df.withColumn(
-                    c, F.lit(None).cast(new.schema[c].dataType)
-                )
-        for c in edge_df.columns:
-            if c not in new.columns:
-                new = new.withColumn(c, F.lit(None).cast(edge_df.schema[c].dataType))
-        g.edges[rel.rel_type] = EdgeSet(
-            df=edge_df.unionByName(new.select(edge_df.columns)),
-            src_label=es.src_label,
-            dst_label=es.dst_label,
-        )
-        return g
+        return _append_edges(g, rel.rel_type, new, es.src_label, es.dst_label)
 
     def _run_merge_path(self, stmt: ast.MergeRelStmt) -> PropertyGraph:
         """Chained relationship MERGE
@@ -511,20 +499,8 @@ class Compiler:
         )
         if updates and var in node_vars:
             np = next(p for p in pats if p.var == var)
-            nodes = g.nodes[np.label]
-            cond = F.lit(True)
-            for k, v in np.props:
-                cond = cond & (
-                    (F.col(k) == F.lit(v)) if k in nodes.columns else F.lit(False)
-                )
-            for k, v in updates:
-                old = F.col(k) if k in nodes.columns else F.lit(None)
-                nodes = nodes.withColumn(
-                    k, F.when(cond, F.lit(v)).otherwise(old)
-                )
-            g = PropertyGraph(
-                nodes={**g.nodes, np.label: nodes}, edges=dict(g.edges)
-            )
+            cond = _props_cond(g.nodes[np.label], np.props)
+            g = _set_nodes(g, np.label, cond, _lits(updates))
         return g
 
     def _path_exists(self, path: ast.PatternPath) -> bool:
@@ -538,10 +514,7 @@ class Compiler:
             if np.label not in g.nodes:
                 return None
             df = g.nodes[np.label]
-            for k, v in np.props:
-                df = (df.filter(F.col(k) == F.lit(v))
-                      if k in df.columns else df.limit(0))
-            return df.select("id")
+            return df.filter(_props_cond(df, np.props)).select("id")
 
         cur = _ids(path.start)
         if cur is None:
@@ -575,8 +548,7 @@ class Compiler:
         from rs_graphdb_spark.graph import ID_STRIDE, LABEL_INDEX
 
         if not stmt.ids:  # FOREACH over [] is a no-op (foreach_test.rs:58)
-            return PropertyGraph(nodes=dict(self.g.nodes),
-                                 edges=dict(self.g.edges))
+            return self.g
         idxs = {i // ID_STRIDE for i in stmt.ids}
         if len(idxs) != 1:
             raise CypherCompileError("FOREACH ids must share one label namespace")
@@ -590,14 +562,8 @@ class Compiler:
                 label = next(iter(self.g.nodes))
             else:
                 raise CypherCompileError("FOREACH ids resolve to no known label")
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
-        nodes = g.nodes[label]
         hit = F.col("id").isin(list(stmt.ids))
-        for k, v in stmt.updates:
-            old = F.col(k) if k in nodes.columns else F.lit(None)
-            nodes = nodes.withColumn(k, F.when(hit, F.lit(v)).otherwise(old))
-        g.nodes[label] = nodes
-        return g
+        return _set_nodes(self.g, label, hit, _lits(stmt.updates))
 
     def _run_call(self, stmt: ast.CallStmt) -> DataFrame:
         """CALL { subquery } RETURN ... (`src/cypher/executor.rs:1625-1650`):
@@ -637,61 +603,36 @@ class Compiler:
             out = out.limit(stmt.limit)
         return out
 
-    # -- DML (graph-rewrite semantics; returns the NEW node DataFrame) ---
-    def _create_node(self, g: PropertyGraph, np: ast.NodePattern) -> int:
-        """Append one node row from a pattern; opens a new label table
-        for a previously-unseen label. Returns the new id (mutates g's
-        node dict)."""
+    # -- DML (graph-rewrite semantics; returns the NEW graph) --------------
+    def _create_node(
+        self, g: PropertyGraph, np: ast.NodePattern
+    ) -> tuple[PropertyGraph, int]:
+        """Append one node row from a pattern with the next dense id; opens
+        a new label table for a previously-unseen label. Returns the new
+        graph and id."""
         if np.label is None:
             raise CypherCompileError("CREATE needs a label")
-        row = {k: v for k, v in np.props}
-        spark = (
-            next(iter(g.nodes.values())).sparkSession if g.nodes
-            else None
-        )
-        if np.label not in g.nodes:
-            if spark is None:
-                raise CypherCompileError(
-                    "CREATE on an empty graph needs a SparkSession-bearing "
-                    "table — load at least one label first"
-                )
-            import pandas as pd
+        if not g.nodes:
+            raise CypherCompileError(
+                "CREATE on an empty graph needs a SparkSession-bearing "
+                "table — load at least one label first"
+            )
+        # Arrow-path literal (see session.local_df): a pickled-list
+        # relation taxes every later action with a Python task
+        import pandas as pd
 
-            new = (
-                spark.createDataFrame(pd.DataFrame([row])) if row
-                else spark.range(1).select()
-            ).withColumn("id", F.lit(1).cast("long"))
-            g.nodes[np.label] = new.select("id", *[c for c in new.columns
-                                                   if c != "id"])
-            return 1
-        nodes = g.nodes[np.label]
-        spark = nodes.sparkSession
-        max_id = int(nodes.agg(F.max("id")).first()[0] or 0)
-        if row:
-            # Arrow-path literal (see session.local_df): a pickled-list
-            # relation taxes every later action with a Python task
-            import pandas as pd
-
-            new = spark.createDataFrame(pd.DataFrame([row]))
-        else:
-            new = spark.range(1).select()
-        new = new.withColumn("id", F.lit(max_id + 1).cast("long"))
-        for c in new.columns:  # new property keys extend the table
-            if c not in nodes.columns:
-                nodes = nodes.withColumn(c, F.lit(None).cast(new.schema[c].dataType))
-        for c in nodes.columns:
-            if c not in new.columns:
-                new = new.withColumn(c, F.lit(None).cast(nodes.schema[c].dataType))
-        g.nodes[np.label] = nodes.unionByName(new.select(nodes.columns))
-        return max_id + 1
+        spark = next(iter(g.nodes.values())).sparkSession
+        nid = _next_id(g.nodes[np.label]) if np.label in g.nodes else 1
+        row = {"id": nid, **{k: v for k, v in np.props if k != "id"}}
+        return _append_nodes(g, np.label, spark.createDataFrame(pd.DataFrame([row]))), nid
 
     def _run_create(self, stmt: ast.CreateStmt) -> PropertyGraph:
         """CREATE appends rows (`src/cypher/executor.rs:610-648`); id =
         max(id)+1 per created node — dense-enough without a single writer
         (SURVEY.md §7 hard-point #4)."""
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
+        g = self.g
         for np in stmt.nodes:
-            self._create_node(g, np)
+            g, _ = self._create_node(g, np)
         return g
 
     def _run_create_rel(self, stmt: ast.CreateRelStmt) -> PropertyGraph:
@@ -699,38 +640,19 @@ class Compiler:
         endpoint nodes and the relationship (reference create-path form,
         `tests/cypher_delete_test.rs:41-45`). A previously-unseen rel type
         opens a new EdgeSet between the pattern labels."""
-        from rs_graphdb_spark.graph import EdgeSet
         from rs_graphdb_spark.session import local_df
 
         (rel, dst_node) = stmt.path.hops[0]
         src_pat, dst_pat = stmt.path.start, dst_node
         if rel.direction == "in":
             src_pat, dst_pat = dst_pat, src_pat
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
-        sid = self._create_node(g, src_pat)
-        did = self._create_node(g, dst_pat)
+        g, sid = self._create_node(self.g, src_pat)
+        g, did = self._create_node(g, dst_pat)
         spark = next(iter(g.nodes.values())).sparkSession
-        if rel.rel_type in g.edges:
-            es = g.edges[rel.rel_type]
-            max_eid = int(es.df.agg(F.max("edge_id")).first()[0] or 0)
-            new = local_df(spark, [(max_eid + 1, sid, did)],
-                           "edge_id long, src long, dst long")
-            g.edges[rel.rel_type] = EdgeSet(
-                df=es.df.unionByName(new, allowMissingColumns=True),
-                src_label=es.src_label, dst_label=es.dst_label,
-            )
-        else:
-            if not (src_pat.label and dst_pat.label):
-                raise CypherCompileError(
-                    f"new relationship type {rel.rel_type!r} needs labeled "
-                    "endpoint patterns"
-                )
-            g.edges[rel.rel_type] = EdgeSet(
-                df=local_df(spark, [(1, sid, did)],
-                            "edge_id long, src long, dst long"),
-                src_label=src_pat.label, dst_label=dst_pat.label,
-            )
-        return g
+        es = g.edges.get(rel.rel_type)
+        eid = _next_id(es.df, "edge_id") if es is not None else 1
+        new = local_df(spark, [(eid, sid, did)], "edge_id long, src long, dst long")
+        return _append_edges(g, rel.rel_type, new, src_pat.label, dst_pat.label)
 
     def _match_victims(self, match: ast.MatchClause, where, var: str) -> tuple[DataFrame, str]:
         df = self._compile_matches([match])
@@ -751,41 +673,20 @@ class Compiler:
         """DELETE cascades to incident edges (`src/cypher/executor.rs:
         650-687`; cascade `src/storage/mem_store.rs:123-147`)."""
         victims, label = self._match_victims(stmt.match, stmt.where, stmt.var)
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
-        g.nodes[label] = g.nodes[label].join(victims, "id", "left_anti")
-        from rs_graphdb_spark.graph import EdgeSet
-
-        for rt, es in list(g.edges.items()):
-            df = es.df
-            if es.src_label == label:
-                df = df.join(victims.withColumnRenamed("id", "src"), "src", "left_anti")
-            if es.dst_label == label:
-                df = df.join(victims.withColumnRenamed("id", "dst"), "dst", "left_anti")
-            g.edges[rt] = EdgeSet(df=df, src_label=es.src_label, dst_label=es.dst_label)
-        return g
+        return _delete_victims(self.g, label, victims)
 
     def _run_set(self, stmt: ast.SetStmt) -> PropertyGraph:
         """SET merges properties under the match predicate
-        (`src/cypher/executor.rs:689-738`)."""
+        (`src/cypher/executor.rs:689-738`); a new property key extends the
+        table schema with NULLs for unmatched rows."""
         victims, label = self._match_victims(stmt.match, stmt.where, stmt.var)
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
-        nodes = g.nodes[label]
-        hit = victims.withColumn("__hit", F.lit(True))
-        df = nodes.join(hit, "id", "left_outer")
-        for k, v in stmt.updates:
-            # SET may introduce a new property key — the reference's bags
-            # are open maps (`src/values/value.rs:14`); here that extends
-            # the table schema with NULLs for unmatched rows
-            old = F.col(k) if k in nodes.columns else F.lit(None)
-            df = df.withColumn(k, F.when(F.col("__hit"), F.lit(v)).otherwise(old))
-        g.nodes[label] = df.drop("__hit")
-        return g
+        return _set_nodes(self.g, label, victims, _lits(stmt.updates))
 
     def _run_merge(self, stmt: ast.MergeStmt) -> PropertyGraph:
         """MERGE = match full pattern else create, with ON CREATE SET /
         ON MATCH SET (`src/cypher/executor.rs:740-1211`)."""
         np = stmt.node
-        g = PropertyGraph(nodes=dict(self.g.nodes), edges=dict(self.g.edges))
+        g = self.g
         if np.label is None:
             # MERGE (n) — matches ANY node (reference
             # `tests/merge_comprehensive_test.rs:392-406`): a no-op on a
@@ -797,43 +698,17 @@ class Compiler:
                 "MERGE without a label on an empty graph is unsupported "
                 "(label-table model has no label-less store)"
             )
-        nodes = g.nodes[np.label]
-        spark = nodes.sparkSession
-        cond = F.lit(True)
-        for k, v in np.props:
-            # a property key the table has never seen can match nothing —
-            # the full pattern is unmatched and MERGE creates (reference
-            # partial-match scenario `merge_comprehensive_test.rs:410-430`)
-            cond = cond & (
-                (F.col(k) == F.lit(v)) if k in nodes.columns else F.lit(False)
-            )
-        matched = nodes.filter(cond)
-        if matched.isEmpty():
-            props = dict(np.props)
-            for k, v in stmt.on_create:
-                props[k] = v
-            max_id = nodes.agg(F.max("id")).first()[0] or 0
-            # Arrow-path literal row: a pickled-list relation would re-run
-            # a Python worker task on EVERY later action over the unioned
-            # table (session.local_df docstring has the numbers)
-            import pandas as pd
-
-            new = spark.createDataFrame(pd.DataFrame([props])).withColumn(
-                "id", F.lit(max_id + 1)
-            )
-            for c in new.columns:  # new property keys extend the table
-                if c not in nodes.columns:
-                    nodes = nodes.withColumn(c, F.lit(None).cast(new.schema[c].dataType))
-            for c in nodes.columns:
-                if c not in new.columns:
-                    new = new.withColumn(c, F.lit(None).cast(nodes.schema[c].dataType))
-            g.nodes[np.label] = nodes.unionByName(new.select(nodes.columns))
-        elif stmt.on_match:
-            upd = nodes
-            for k, v in stmt.on_match:
-                old = F.col(k) if k in nodes.columns else F.lit(None)
-                upd = upd.withColumn(k, F.when(cond, F.lit(v)).otherwise(old))
-            g.nodes[np.label] = upd
+        # a property key the table has never seen can match nothing — the
+        # full pattern is unmatched and MERGE creates (reference
+        # partial-match scenario `merge_comprehensive_test.rs:410-430`)
+        cond = _props_cond(g.nodes[np.label], np.props)
+        if g.nodes[np.label].filter(cond).isEmpty():
+            # ON CREATE SET values override the pattern's
+            pat = ast.NodePattern(var=np.var, label=np.label,
+                                  props=np.props + stmt.on_create)
+            return self._create_node(g, pat)[0]
+        if stmt.on_match:
+            return _set_nodes(g, np.label, cond, _lits(stmt.on_match))
         return g
 
 

@@ -149,14 +149,14 @@ class PropertyGraph:
     #: nodes, with FK integrity). Lets Query skip the hop's target-node
     #: attribute join when only the hop multiplicity is consumed (a
     #: count() after out() — the join is then a 1:1 attach that changes
-    #: nothing). Validated DML preserves the premises (merge_nodes
-    #: anti-joins against existing keys; delete cascades incident
-    #: edges) and keeps the flag; UNVALIDATED mutations — dml
-    #: create_nodes (id minted from a possibly-colliding natural key)
-    #: and the HTTP server's create nodes/rels (arbitrary client ids
-    #: and endpoints) — clear it (r10 ADVICE #1). Graphs assembled ad
-    #: hoc (Cypher CREATE paths) default to False and keep the full
-    #: join.
+    #: nothing). Writes decide the flag in one place, operators/dml.py,
+    #: whichever route (library, Cypher, HTTP) issued them: deletes
+    #: (which cascade incident edges), property updates and merge_nodes
+    #: (created keys are anti-joined against existing ones) keep it;
+    #: appends whose ids or endpoints are not validated (create_nodes,
+    #: Cypher CREATE and MERGE-create, HTTP creates) and any write that
+    #: assigns ``id``, ``src`` or ``dst`` clear it. Graphs assembled ad
+    #: hoc default to False and keep the full join.
     edge_integrity: bool = False
 
     # -- scans ------------------------------------------------------------

@@ -5,6 +5,13 @@ The reference mutates stores in place (CREATE/DELETE/SET/MERGE,
 equivalent is a *rewrite*: each operation produces new node/edge
 DataFrames (write them back as Parquet/Delta for persistence — batch-job
 atomicity replaces the reference's op-log transactions, SURVEY.md §2.11).
+
+This is the one write path: the public functions below, Cypher DML
+(`cypher/compiler.py`) and the HTTP routes (`sources/http_server.py`) all
+rewrite tables through it, and only it decides whether
+``PropertyGraph.edge_integrity`` survives a write. Deletes and property
+updates keep the flag; appends (their ids and endpoints are not validated)
+and any write that assigns ``id``, ``src`` or ``dst`` clear it.
 """
 
 from __future__ import annotations
@@ -15,7 +22,59 @@ from dataclasses import replace as dc_replace
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rs_graphdb_spark.graph import PropertyGraph, label_base
+from rs_graphdb_spark.graph import EdgeSet, PropertyGraph, label_base
+
+#: columns whose assignment voids the unique-id / existing-endpoint premises
+_KEY_COLS = frozenset({"id", "src", "dst"})
+
+
+def _with_nodes(graph: PropertyGraph, label: str, df: DataFrame,
+                keeps_integrity: bool) -> PropertyGraph:
+    return dc_replace(graph, nodes={**graph.nodes, label: df},
+                      edge_integrity=graph.edge_integrity and keeps_integrity)
+
+
+def _with_edges(graph: PropertyGraph, rel_type: str, es: EdgeSet,
+                keeps_integrity: bool) -> PropertyGraph:
+    return dc_replace(graph, edges={**graph.edges, rel_type: es},
+                      edge_integrity=graph.edge_integrity and keeps_integrity)
+
+
+def _append_nodes(graph: PropertyGraph, label: str, rows: DataFrame) -> PropertyGraph:
+    """Append rows to a label table, or open it for a new label. Columns
+    one side lacks are NULL-filled, so new property keys extend the table.
+    The appended ids are not validated unique: clears edge_integrity."""
+    df = graph.nodes.get(label)
+    df = rows if df is None else df.unionByName(rows, allowMissingColumns=True)
+    return _with_nodes(graph, label, df, keeps_integrity=False)
+
+
+def _append_edges(graph: PropertyGraph, rel_type: str, rows: DataFrame,
+                  src_label: str, dst_label: str) -> PropertyGraph:
+    """Edge twin of :func:`_append_nodes`; a new rel type opens an EdgeSet
+    between ``src_label`` and ``dst_label``. The endpoints are not
+    validated to exist: clears edge_integrity."""
+    es = graph.edges.get(rel_type)
+    if es is None:
+        es = EdgeSet(df=rows, src_label=src_label, dst_label=dst_label)
+    else:
+        es = dc_replace(es, df=es.df.unionByName(rows, allowMissingColumns=True))
+    return _with_edges(graph, rel_type, es, keeps_integrity=False)
+
+
+def _next_id(df: DataFrame, col: str = "id") -> int:
+    """Dense next id, ``max(col) + 1`` (1 on an empty table) — the
+    reference's counter (`src/storage/mem_store.rs:56-57`)."""
+    return int(df.agg(F.max(col)).first()[0] or 0) + 1
+
+
+def _props_cond(df: DataFrame, props) -> Column:
+    """Match condition of pattern props ``((key, literal), ...)`` on
+    ``df``. A key the table has never seen matches nothing."""
+    cond = F.lit(True)
+    for k, v in props:
+        cond = cond & ((F.col(k) == F.lit(v)) if k in df.columns else F.lit(False))
+    return cond
 
 
 def create_nodes(
@@ -24,32 +83,20 @@ def create_nodes(
     """CREATE (`src/cypher/executor.rs:610-648`): append rows to a label
     table. Ids are assigned from the natural key (arithmetic, shuffle-free);
     the reference's dense sequential counter (`src/storage/mem_store.rs:
-    56-57`) is documented divergence (SURVEY.md §7 hard-point 4)."""
+    56-57`) is documented divergence (SURVEY.md §7 hard-point 4). A
+    colliding natural key mints a duplicate id (no uniqueness validation —
+    contrast merge_nodes), so the result has edge_integrity cleared."""
     with_id = rows.select(
         (F.lit(label_base(label)) + F.col(key_col).cast("long")).alias("id"), "*"
     )
-    nodes = dict(graph.nodes)
-    nodes[label] = graph.nodes[label].unionByName(with_id, allowMissingColumns=True)
-    # edge_integrity cleared (r10 ADVICE #1): a colliding natural key
-    # mints a DUPLICATE id here (no uniqueness validation — contrast
-    # merge_nodes, which anti-joins against existing keys), breaking the
-    # unique-id premise of the hop-join elision. The flag only gates an
-    # optimization, so clearing it costs nothing but the narrow-frame
-    # shortcut on post-create graphs.
-    return dc_replace(graph, nodes=nodes, edge_integrity=False)
+    return _append_nodes(graph, label, with_id)
 
 
-def delete_nodes(graph: PropertyGraph, label: str, cond: Column) -> PropertyGraph:
-    """DELETE with cascade to incident edges
-    (`src/cypher/executor.rs:650-687`; cascade `src/storage/mem_store.rs:
-    123-147`): anti-join the victims out of the label table and out of
-    every edge set touching that label."""
-    victims = graph.nodes[label].filter(cond).select("id")
-    nodes = dict(graph.nodes)
-    # Survivors via left_anti on the victim set, NOT filter(~cond): a NULL
-    # predicate (nullable property) must keep the row, matching the Cypher
-    # executor's three-valued WHERE semantics.
-    nodes[label] = graph.nodes[label].join(victims, "id", "left_anti")
+def _delete_victims(graph: PropertyGraph, label: str,
+                    victims: DataFrame) -> PropertyGraph:
+    """Cascade delete of the ids in ``victims``: anti-join them out of the
+    label table and out of every edge set touching that label."""
+    nodes = {**graph.nodes, label: graph.nodes[label].join(victims, "id", "left_anti")}
     edges = {}
     for rel, es in graph.edges.items():
         df = es.df
@@ -61,15 +108,59 @@ def delete_nodes(graph: PropertyGraph, label: str, cond: Column) -> PropertyGrap
     return dc_replace(graph, nodes=nodes, edges=edges)
 
 
+def delete_nodes(graph: PropertyGraph, label: str, cond: Column) -> PropertyGraph:
+    """DELETE with cascade to incident edges
+    (`src/cypher/executor.rs:650-687`; cascade `src/storage/mem_store.rs:
+    123-147`)."""
+    # Survivors via left_anti on the victim set, NOT filter(~cond): a NULL
+    # predicate (nullable property) must keep the row, matching the Cypher
+    # executor's three-valued WHERE semantics.
+    return _delete_victims(graph, label, graph.nodes[label].filter(cond).select("id"))
+
+
+def _delete_edges(graph: PropertyGraph, rel_type: str, cond: Column) -> PropertyGraph:
+    """Drop the edges matching ``cond`` from one edge set."""
+    es = graph.edges[rel_type]
+    return _with_edges(graph, rel_type, dc_replace(es, df=es.df.filter(~cond)),
+                       keeps_integrity=True)
+
+
 def set_props(df: DataFrame, cond: Column, updates: dict[str, Column]) -> DataFrame:
     """SET under a match predicate (`src/cypher/executor.rs:689-738`):
     merge-not-replace property semantics (`src/storage/mem_store.rs:
-    313-325`) → conditional column rewrite."""
+    313-325`) → conditional column rewrite. A key the table lacks extends
+    it, NULL on unmatched rows (the reference's bags are open maps)."""
     out = df
     for col_name, value in updates.items():
         base = F.col(col_name) if col_name in df.columns else F.lit(None)
         out = out.withColumn(col_name, F.when(cond, value).otherwise(base))
     return out
+
+
+def _set_matched(df: DataFrame, match: Column | DataFrame,
+                 updates: dict[str, Column]) -> DataFrame:
+    """:func:`set_props` on the rows ``match`` selects: a predicate, or a
+    frame of matched keys (unique on ``match.columns``, joined on them)."""
+    if isinstance(match, Column):
+        return set_props(df, match, updates)
+    flagged = df.join(match.withColumn("__hit", F.lit(True)), match.columns,
+                      "left_outer")
+    return set_props(flagged, F.col("__hit"), updates).drop("__hit")
+
+
+def _set_nodes(graph: PropertyGraph, label: str, match: Column | DataFrame,
+               updates: dict[str, Column]) -> PropertyGraph:
+    """SET on a label table (see :func:`_set_matched` for ``match``)."""
+    df = _set_matched(graph.nodes[label], match, updates)
+    return _with_nodes(graph, label, df, _KEY_COLS.isdisjoint(updates))
+
+
+def _set_edges(graph: PropertyGraph, rel_type: str, match: Column | DataFrame,
+               updates: dict[str, Column]) -> PropertyGraph:
+    """SET on an edge set (see :func:`_set_matched` for ``match``)."""
+    es = graph.edges[rel_type]
+    es = dc_replace(es, df=_set_matched(es.df, match, updates))
+    return _with_edges(graph, rel_type, es, _KEY_COLS.isdisjoint(updates))
 
 
 def merge_nodes(
@@ -82,15 +173,14 @@ def merge_nodes(
 ) -> PropertyGraph:
     """MERGE (`src/cypher/executor.rs:740-1211`): match by key else create,
     with ON CREATE SET / ON MATCH SET — left-anti to find the missing
-    pattern instances, conditional update on the matched ones."""
+    pattern instances, conditional update on the matched ones. Created
+    ids come from keys that are anti-joined against the existing ones, so
+    edge_integrity survives unless ON MATCH assigns a key column."""
     existing = graph.nodes[label]
     # MERGE key semantics: one pattern instance per key — duplicate incoming
     # keys would multiply matched rows through the flag join and mint
     # duplicate ids in the created branch.
     incoming = incoming.dropDuplicates([key_col])
-    matched_keys = incoming.select(key_col).join(
-        existing.select(key_col), key_col, "left_semi"
-    )
     to_create = incoming.join(existing.select(key_col), key_col, "left_anti")
     if on_create:
         for c, v in on_create.items():
@@ -98,18 +188,17 @@ def merge_nodes(
     created = to_create.select(
         (F.lit(label_base(label)) + F.col(key_col).cast("long")).alias("id"), "*"
     )
-    # ON MATCH applied via join flag (no driver-side collect)
-    flag = matched_keys.withColumn("__matched", F.lit(True))
-    updated = existing.join(flag, key_col, "left")
+    updated = existing
     if on_match:
-        for c, v in on_match.items():
-            updated = updated.withColumn(
-                c, F.when(F.col("__matched"), v).otherwise(F.col(c))
-            )
-    updated = updated.drop("__matched")
-    nodes = dict(graph.nodes)
-    nodes[label] = updated.unionByName(created, allowMissingColumns=True)
-    return dc_replace(graph, nodes=nodes)
+        # ON MATCH applied via join flag (no driver-side collect)
+        matched_keys = incoming.select(key_col).join(
+            existing.select(key_col), key_col, "left_semi"
+        )
+        updated = _set_matched(existing, matched_keys, on_match)
+    return _with_nodes(
+        graph, label, updated.unionByName(created, allowMissingColumns=True),
+        _KEY_COLS.isdisjoint(on_match or {}),
+    )
 
 
 def update_node_props(
@@ -123,14 +212,10 @@ def update_node_props(
     is a no-op reporting False."""
     if label not in graph.nodes:
         return graph, False
-    df = graph.nodes[label]
     cond = F.col("id") == F.lit(node_id)
-    if df.filter(cond).isEmpty():
+    if graph.nodes[label].filter(cond).isEmpty():
         return graph, False
-    updated = set_props(df, cond, {k: F.lit(v) for k, v in props.items()})
-    nodes = dict(graph.nodes)
-    nodes[label] = updated
-    return dc_replace(graph, nodes=nodes), True
+    return _set_nodes(graph, label, cond, {k: F.lit(v) for k, v in props.items()}), True
 
 
 def update_rel_props(
@@ -140,14 +225,10 @@ def update_rel_props(
     (`tests/core_features_test.rs:131-170`)."""
     if rel_type not in graph.edges:
         return graph, False
-    es = graph.edges[rel_type]
     cond = F.col("edge_id") == F.lit(edge_id)
-    if es.df.filter(cond).isEmpty():
+    if graph.edges[rel_type].df.filter(cond).isEmpty():
         return graph, False
-    updated = set_props(es.df, cond, {k: F.lit(v) for k, v in props.items()})
-    edges = dict(graph.edges)
-    edges[rel_type] = dc_replace(es, df=updated)
-    return dc_replace(graph, edges=edges), True
+    return _set_edges(graph, rel_type, cond, {k: F.lit(v) for k, v in props.items()}), True
 
 
 # -- constraints (`src/constraints/mod.rs:14-52,143-213`) -------------------

@@ -16,10 +16,13 @@ reference caps via pagination; a serving layer must never `collect()` an
 unbounded result).
 
 Write semantics: the graph is immutable DataFrames, so every write swaps
-the served `PropertyGraph` for a rewritten one (exactly how Cypher DML
-executes). Single-row POSTs exist for API parity; the scale path is the
-`/batch/*` endpoints (one union per request, not per row), mirroring the
-reference's `batch_create_nodes` (`src/graph/db.rs:170-203`).
+the served `PropertyGraph` for a rewritten one. The REST and gRPC writes
+only shape the request into rows; the rewrite itself — and whether
+``edge_integrity`` survives it — is `operators/dml.py`'s, the same code
+Cypher DML runs, so a write leaves the same table on every route.
+Single-row POSTs exist for API parity; the scale path is the `/batch/*`
+endpoints (one union per request, not per row), mirroring the reference's
+`batch_create_nodes` (`src/graph/db.rs:170-203`).
 
 Thread-safety: Spark DataFrame actions are thread-safe on one
 SparkSession; graph swaps happen under a lock (the reference serializes
@@ -31,14 +34,22 @@ from __future__ import annotations
 import json
 import re
 import threading
-from dataclasses import replace as dc_replace
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.cypher import execute_cypher
-from rs_graphdb_spark.graph import EdgeSet, PropertyGraph
+from rs_graphdb_spark.graph import PropertyGraph
+from rs_graphdb_spark.operators.dml import (
+    _append_edges,
+    _append_nodes,
+    _delete_edges,
+    _next_id,
+    delete_nodes,
+    update_node_props,
+    update_rel_props,
+)
 from rs_graphdb_spark.session import local_df
 from rs_graphdb_spark.sources.json_api import json_query, substring_search
 
@@ -196,10 +207,7 @@ class GraphHTTPServer:
                 if "id" in props:
                     nid = int(props["id"])
                 else:  # dense next-id like the reference's counter
-                    nid = (
-                        (g.nodes[label].agg(F.max("id")).first()[0] or 0) + 1
-                        if label in g.nodes else 1
-                    )
+                    nid = _next_id(g.nodes[label]) if label in g.nodes else 1
                 self._create_nodes(
                     [{"labels": [label], "properties": {**props, "id": nid}}]
                 )
@@ -207,14 +215,8 @@ class GraphHTTPServer:
         if path == "/grpc/CreateRelationship":
             req = pw.decode_create_rel_request(body)
             with self._lock:
-                g = self.graph
-                if req["rel_type"] in g.edges:
-                    eid = (
-                        g.edges[req["rel_type"]].df.agg(F.max("edge_id"))
-                        .first()[0] or 0
-                    ) + 1
-                else:
-                    eid = 1
+                es = self.graph.edges.get(req["rel_type"])
+                eid = _next_id(es.df, "edge_id") if es is not None else 1
                 self._create_rels([{
                     "rel_type": req["rel_type"], "edge_id": eid,
                     "src": req["start"], "dst": req["end"],
@@ -404,6 +406,8 @@ class GraphHTTPServer:
         return out.orderBy("rel_type", "direction", "id")
 
     def _create_nodes(self, items: list[dict]) -> dict:
+        import pandas as pd
+
         spark = next(iter(self.graph.nodes.values())).sparkSession
         by_label: dict[str, list[dict]] = {}
         for it in items:
@@ -413,27 +417,14 @@ class GraphHTTPServer:
                 raise ValueError("node creation requires properties.id")
             by_label.setdefault(label, []).append(props)
         with self._lock:
-            nodes = dict(self.graph.nodes)
-            created = 0
+            g = self.graph
             for label, rows in by_label.items():
-                import pandas as pd
-
                 new = spark.createDataFrame(pd.DataFrame(rows))
                 new = new.select(F.col("id").cast("long"), *
                                  [c for c in new.columns if c != "id"])
-                if label in nodes:
-                    nodes[label] = nodes[label].unionByName(
-                        new, allowMissingColumns=True
-                    )
-                else:
-                    nodes[label] = new
-                created += len(rows)
-            # client-supplied node ids are not validated unique →
-            # edge_integrity's unique-id premise no longer holds
-            # (r10 ADVICE #1); the flag only gates the hop-join elision
-            self.graph = dc_replace(self.graph, nodes=nodes,
-                                    edge_integrity=False)
-        return {"ok": True, "created": created}
+                g = _append_nodes(g, label, new)
+            self.graph = g
+        return {"ok": True, "created": len(items)}
 
     def _create_rels(self, items: list[dict]) -> dict:
         spark = next(iter(self.graph.nodes.values())).sparkSession
@@ -443,45 +434,21 @@ class GraphHTTPServer:
                 (int(it["edge_id"]), int(it["src"]), int(it["dst"]))
             )
         with self._lock:
-            edges = dict(self.graph.edges)
-            created = 0
+            g = self.graph
             for rt, rows in by_type.items():
                 new = local_df(spark, rows, "edge_id long, src long, dst long")
-                if rt in edges:
-                    edges[rt] = dc_replace(
-                        edges[rt],
-                        df=edges[rt].df.unionByName(new, allowMissingColumns=True),
-                    )
-                else:
-                    edges[rt] = EdgeSet(df=new, src_label="Node", dst_label="Node")
-                created += len(rows)
-            # client-supplied (src, dst) endpoints are not validated to
-            # exist → a dangling endpoint breaks the 1:1 premise of the
-            # hop-join elision; clear the flag (r10 ADVICE #1)
-            self.graph = dc_replace(self.graph, edges=edges,
-                                    edge_integrity=False)
-        return {"ok": True, "created": created}
+                g = _append_edges(g, rt, new, "Node", "Node")
+            self.graph = g
+        return {"ok": True, "created": len(items)}
 
     def _update_node(self, node_id: int, props: dict) -> dict:
         lb = self._find_label(node_id)
+        props = {k: v for k, v in props.items() if k != "id"}
         with self._lock:
-            nodes = dict(self.graph.nodes)
-            df = nodes[lb]
-            for k, v in props.items():
-                if k == "id":
-                    continue
-                if k not in df.columns:
-                    df = df.withColumn(k, F.lit(None).cast("string"))
-                df = df.withColumn(
-                    k, F.when(F.col("id") == node_id, F.lit(v)).otherwise(F.col(k))
-                )
-            nodes[lb] = df
-            self.graph = dc_replace(self.graph, nodes=nodes)
+            self.graph, _ = update_node_props(self.graph, lb, node_id, props)
         return {"ok": True}
 
     def _delete_node(self, node_id: int) -> dict:
-        from rs_graphdb_spark.operators.dml import delete_nodes
-
         lb = self._find_label(node_id)
         with self._lock:
             self.graph = delete_nodes(self.graph, lb, F.col("id") == node_id)
@@ -500,30 +467,15 @@ class GraphHTTPServer:
 
     def _update_rel(self, edge_id: int, props: dict) -> dict:
         rt = self._find_rel_type(edge_id)
+        props = {k: v for k, v in props.items() if k not in ("edge_id", "src", "dst")}
         with self._lock:
-            edges = dict(self.graph.edges)
-            df = edges[rt].df
-            for k, v in props.items():
-                if k in ("edge_id", "src", "dst"):
-                    continue
-                if k not in df.columns:
-                    df = df.withColumn(k, F.lit(None).cast("string"))
-                df = df.withColumn(
-                    k,
-                    F.when(F.col("edge_id") == edge_id, F.lit(v)).otherwise(F.col(k)),
-                )
-            edges[rt] = dc_replace(edges[rt], df=df)
-            self.graph = dc_replace(self.graph, edges=edges)
+            self.graph, _ = update_rel_props(self.graph, rt, edge_id, props)
         return {"ok": True}
 
     def _delete_rel(self, edge_id: int) -> dict:
         rt = self._find_rel_type(edge_id)
         with self._lock:
-            edges = dict(self.graph.edges)
-            edges[rt] = dc_replace(
-                edges[rt], df=edges[rt].df.filter(F.col("edge_id") != edge_id)
-            )
-            self.graph = dc_replace(self.graph, edges=edges)
+            self.graph = _delete_edges(self.graph, rt, F.col("edge_id") == edge_id)
         return {"ok": True}
 
     # -- lifecycle ---------------------------------------------------------

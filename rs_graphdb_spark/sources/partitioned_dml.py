@@ -53,6 +53,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rs_graphdb_spark.graph import EdgeSet, PropertyGraph
+from rs_graphdb_spark.operators.dml import _set_matched
 
 #: dataset partition column (lives in directory names, never in data files)
 PB = "pb"
@@ -466,21 +467,9 @@ def set_props_partitioned(
     if n_matched == 0:
         return 0
 
-    def _apply(df: DataFrame) -> DataFrame:
-        out = df
-        flag = matched.withColumn("__m", F.lit(True))
-        out = out.join(flag, "id", "left")
-        for col_name, value in updates.items():
-            base = (
-                F.col(col_name) if col_name in df.columns else F.lit(None)
-            )
-            out = out.withColumn(
-                col_name, F.when(F.col("__m"), value).otherwise(base)
-            )
-        return out.drop("__m")
-
     staged = _rewrite_buckets(
-        spark, path, node_rel, _victim_buckets(matched, "id", n), _apply
+        spark, path, node_rel, _victim_buckets(matched, "id", n),
+        lambda df: _set_matched(df, matched, updates),
     )
     if staged:
         _commit(path, ver, manifest, {f"nodes/{label}": staged})

@@ -8,6 +8,7 @@ import urllib.request
 import pytest
 
 from rs_graphdb_spark.loaders import load_tpch_graph
+from rs_graphdb_spark.operators.dml import update_node_props
 from rs_graphdb_spark.sources.http_server import GraphHTTPServer
 
 SF = "/root/testdata/sf0.001"
@@ -121,6 +122,12 @@ def test_rest_node_crud_roundtrip(server):
     st, _ = _call(server, "PUT", "/nodes/900001", {"properties": {"name": "w2"}})
     st, got = _call(server, "GET", "/nodes/900001")
     assert got["rows"][0]["name"] == "w2"
+    # a key the table lacks yet extends it exactly as the library update does
+    lib, ok = update_node_props(server.graph, "Widget", 900001, {"score": 5})
+    st, _ = _call(server, "PUT", "/nodes/900001", {"properties": {"score": 5}})
+    got_df, want_df = (g.nodes["Widget"].select("id", "score") for g in (server.graph, lib))
+    assert ok and got_df.dtypes == want_df.dtypes
+    assert sorted(got_df.collect()) == sorted(want_df.collect())
     # delete
     st, _ = _call(server, "DELETE", "/nodes/900001")
     try:

@@ -255,3 +255,13 @@ def test_ngram_packed_engine_bit_equals_legacy(spark):
         rows(ngram_jaccard_pairs(neg, "doc_id", "text", engine="legacy"))
     with pytest.raises(ValueError, match="packed-route"):
         ngram_jaccard_pairs(neg, "doc_id", "text", engine="packed")
+
+    # string ids: auto routes legacy (the dtype test precedes the id-range
+    # casts), packed refuses
+    strs = local_df(spark, [("doc_a", "a b c d e"), ("doc_b", "a b c d e"),
+                            ("doc_c", "a b c x y")],
+                    "doc_id string, text string")
+    legacy = rows(ngram_jaccard_pairs(strs, "doc_id", "text", engine="legacy"))
+    assert legacy and rows(ngram_jaccard_pairs(strs, "doc_id", "text")) == legacy
+    with pytest.raises(ValueError, match="packed-route"):
+        ngram_jaccard_pairs(strs, "doc_id", "text", engine="packed")
